@@ -244,25 +244,6 @@ object ExtensionQueries {
     """list_sum(list_transform(range(1, len(a.embedding)+1), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
        / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
           * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"""
-  /** Recursive connected-components closure over an edge relation
-    * `pairsRel(src, dst)` — the DuckDB mirror of
-    * [[graft.operators.Dedup.connectedComponents]].
-    */
-  /** Bounded connected-components mirror: `depth` rounds of min-label
-    * propagation, each round relaxing along edges AND pointer-jumping
-    * through the current labeling (`l ∘ l`), so convergence needs only
-    * O(log diameter) rounds — depth 12 covers diameters into the
-    * thousands. Unlike the recursive closure in [[sqlCcFromPairs]] (which
-    * materializes every (node, smaller-reachable-label) pair — quadratic
-    * per near-clique, the q218 sf0.1 timeout), each round here is one
-    * |E|+|V| join-and-groupby over MATERIALIZED CTEs (three references per
-    * level would otherwise re-inline exponentially).
-    *
-    * Terminal relations: `comps(node, comp)` plus `conv(n_changed)`; the
-    * consumer MUST splice a poison row gated on `n_changed > 0` into its
-    * final SELECT so a non-converged run hash-mismatches loudly instead of
-    * silently passing with split components.
-    */
   /** Shared CTE block: per-image aHash halves REGENERATED from
     * [[graft.operators.Multimodal.synthesizePng]]'s closed-form pixels
     * (`(x·31 + y·7 + id) mod 2^24`, integer luma, 8×8 pooling,
@@ -567,6 +548,21 @@ object ExtensionQueries {
                  FROM vpbits GROUP BY 1, 2)"""
   }
 
+  /** Bounded connected-components mirror: `depth` rounds of min-label
+    * propagation, each round relaxing along edges AND pointer-jumping
+    * through the current labeling (`l ∘ l`), so convergence needs only
+    * O(log diameter) rounds — depth 12 covers diameters into the
+    * thousands. Unlike the recursive closure in [[sqlCcFromPairs]] (which
+    * materializes every (node, smaller-reachable-label) pair — quadratic
+    * per near-clique, the q218 sf0.1 timeout), each round here is one
+    * |E|+|V| join-and-groupby over MATERIALIZED CTEs (three references per
+    * level would otherwise re-inline exponentially).
+    *
+    * Terminal relations: `comps(node, comp)` plus `conv(n_changed)`; the
+    * consumer MUST splice a poison row gated on `n_changed > 0` into its
+    * final SELECT so a non-converged run hash-mismatches loudly instead of
+    * silently passing with split components.
+    */
   private def sqlCcBoundedFromPairs(pairsRel: String, depth: Int = 12): String = {
     val steps = (1 to depth)
       .map { i =>
@@ -586,6 +582,10 @@ object ExtensionQueries {
         comps AS (SELECT node, comp FROM l$depth)"""
   }
 
+  /** Recursive connected-components closure over an edge relation
+    * `pairsRel(src, dst)` — the DuckDB mirror of
+    * [[graft.operators.Dedup.connectedComponents]].
+    */
   private def sqlCcFromPairs(pairsRel: String): String =
     s"""e AS (SELECT src, dst FROM $pairsRel UNION SELECT dst, src FROM $pairsRel),
         nodes AS (SELECT DISTINCT src AS id FROM e),
@@ -1755,7 +1755,7 @@ object ExtensionQueries {
         .jaccardPairs(t(s, d, "documents"), "doc_id", "text", "source", threshold = 0.9)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
       Dedup
-        .connectedComponentsAdaptive(pairs)
+        .connectedComponents(pairs)
         .select(
           col("id").as("doc_id"),
           col("comp").as("cluster_id"),
@@ -2084,10 +2084,10 @@ object ExtensionQueries {
         .orderBy("id_a", "id_b")
     }),
 
-    // ---- Connected components over a LONG-CHAIN graph via alternating
-    //      star contraction: consecutive customers within a market segment
-    //      form ~3000-node chains — min-label propagation would need ~3000
-    //      rounds (and loudly refuses); star contraction needs O(log n).
+    // ---- Connected components over a LONG-CHAIN graph: consecutive
+    //      customers within a market segment form ~3000-node chains — a
+    //      min-label propagation would need ~3000 rounds; star contraction
+    //      needs O(log n).
     //      The oracle is closed-form: component = min custkey per segment --
     "q64_cc_chain" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
@@ -2098,7 +2098,7 @@ object ExtensionQueries {
         .filter(col("nxt").isNotNull)
         .select(col("c_custkey").as("src"), col("nxt").as("dst"))
       Dedup
-        .connectedComponentsStar(edges)
+        .connectedComponents(edges)
         .select(col("id").as("c_custkey"), col("comp").as("cluster_id"))
         .orderBy("c_custkey")
     }),
@@ -2732,7 +2732,7 @@ object ExtensionQueries {
     "q111_dup_report" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", "source", threshold = 0.8)
-      val cc = Dedup.connectedComponentsAdaptive(pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+      val cc = Dedup.connectedComponents(pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
       val sizes = docs
         .join(cc, docs("doc_id") === cc("id"), "left_outer")
         .select(coalesce(col("comp"), col("doc_id")).as("cluster_id"))
@@ -3881,14 +3881,14 @@ object ExtensionQueries {
         .dayNRetention(events(s, d), "user_id", "ts", offsets = Seq(1, 7))
         .orderBy("signup_day")),
 
-    // ---- Star-contraction CC oracled end-to-end: the O(log n)-round
-    //      variant labels the same clusters as min-label propagation ----
+    // ---- Connected components oracled end-to-end over the LSH pair
+    //      graph: cluster sizes per component minimum ----
     "q225_star_clusters" -> ((s, d) => {
       val pairs = Dedup
         .minhashNearDupPairs(t(s, d, "documents"), "doc_id", "text", K, 4, 0.8)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
       Dedup
-        .connectedComponentsStar(pairs)
+        .connectedComponents(pairs)
         .groupBy(col("comp"))
         .agg(count(lit(1)).as("n_members"))
         .select(col("comp").as("cluster_id"), col("n_members"))
@@ -8489,9 +8489,9 @@ object ExtensionQueries {
                  CAST(SUM(r1) * 1000 // COUNT(*) AS BIGINT) AS d1_milli,
                  CAST(SUM(r7) * 1000 // COUNT(*) AS BIGINT) AS d7_milli
           FROM pu GROUP BY first ORDER BY signup_day""",
-    // Star contraction and min-label propagation share the (id, comp = min
-    // id) contract, so ONE bounded mirror oracles both; poison row on
-    // non-convergence (the q218 rule).
+    // The bounded min-label mirror computes the same (id, comp = min id)
+    // contract as Dedup.connectedComponents; poison row on non-convergence
+    // (the q218 rule).
     "q225_star_clusters" ->
       s"""WITH ${sqlLshPairs("documents", 0.8)},
               lp AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM lshp),

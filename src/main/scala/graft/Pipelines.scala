@@ -26,7 +26,7 @@ object Pipelines {
     */
   def parser(fact: DataFrame, lookup: DataFrame): DataFrame = {
     val cls = Normalize.classify(fact.columns.toSeq)
-    val nested = Unpivot.nest(fact, cls.dateCols)
+    val nested = Unpivot.nest(emptyAttrsAsBlank(fact), cls.dateCols)
     val normalized = nested.select((col("time_series") +: Normalize.lowercasedAttrs(cls)): _*)
     Enrich.enrich(
       normalized,
@@ -49,9 +49,9 @@ object Pipelines {
   def parser2(confirmed: DataFrame, deaths: DataFrame, recovered: DataFrame, lookup: DataFrame): DataFrame = {
     val key = Seq("Country/Region", "Province/State")
     val combined = Combine.combine(
-      driver = confirmed,
+      driver = emptyAttrsAsBlank(confirmed),
       driverMeasure = "confirmed",
-      measures = Seq("deaths" -> deaths, "recovered" -> recovered),
+      measures = Seq("deaths" -> emptyAttrsAsBlank(deaths), "recovered" -> emptyAttrsAsBlank(recovered)),
       keyCols = key,
     )
     val cls = Normalize.classify(confirmed.columns.toSeq)
@@ -65,6 +65,16 @@ object Pipelines {
       projections = Seq((col("iso2"), "iso2")),
     )
   }
+
+  /** `csv.DictReader` reads an empty field as `""`; Spark's CSV reader reads
+    * it as null. Blank the nulls of the attribute columns (the non-date,
+    * non-Lat/Long ones) so an empty `Province/State` joins in
+    * [[Combine.combine]], keys its record and serializes as the reference's
+    * `""`. Date columns keep their nulls: ANSI mode throws on
+    * `cast("" as int)`.
+    */
+  private def emptyAttrsAsBlank(df: DataFrame): DataFrame =
+    df.na.fill("", Normalize.classify(df.columns.toSeq).other)
 
   /** Output key synthesis (P5/P6, reference `src/parser.py:72-75`):
     * `type=<category>/<country>[-<province>].json`.

@@ -30,7 +30,7 @@ object PlanDump {
     // side of the banding family reads as one `Scan ExistingRDD` line
     // otherwise). Tag such dumps differently — the full tree is NOT the
     // executed plan shape (truncation is load-bearing in real runs).
-    if (sys.env.contains("SPARK_GRAFT_DUMP_FULL"))
+    if (sys.env.contains(graft.operators.Lineage.DumpFullEnv))
       spark.conf.set(graft.operators.Lineage.DumpFullPlansKey, "true")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>

@@ -23,10 +23,8 @@ import org.apache.spark.sql.functions._
   *
   * The pair/CC family additionally probes 16×/32× (override with
   * SPARK_GRAFT_SCALE_CC_FACTORS): the LSH pair build must stay linear in
-  * the true pair count, and the two connected-components variants
-  * (min-label propagation vs alternating star contraction) are compared on
-  * wall time AND rounds-to-converge over the same physical pair set, with
-  * a component-census equality tripwire.
+  * the true pair count, and connected components reports wall time AND
+  * star rounds-to-converge over the pair set, behind a labeling tripwire.
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 runMain graft.ScaleBench
   */
@@ -581,15 +579,10 @@ object ScaleBench {
       releaseRetainedState()
     }
 
-    // --- pair/CC family (q218-shaped): pairs once, then BOTH CC variants
-    //     on the same physical pair set. Reported per factor: pair build
-    //     time, each variant's wall time AND rounds-to-converge, and the
-    //     component census (must agree between variants — a cheap
-    //     correctness tripwire riding the probe).
-    def reportCc(op: String, factor: Int, sec: Double, rows: Long, rounds: Int): Unit =
-      println(
-        s"""{"op":"$op","factor":$factor,"sec":${math.round(sec * 1000) / 1000.0},"rows":$rows,"rounds":$rounds}"""
-      )
+    // --- pair/CC family (q218-shaped): the LSH pair build, then
+    //     connected components over the written pair set (wall time, the
+    //     component count and star rounds-to-converge), then a labeling
+    //     tripwire.
     for (f <- ccFactors if families("cc")) {
       val docs = spark.read.parquet(s"$tmp/documents_$f")
       // BUILD measured separately from BUILD+WRITE (two runs of the same
@@ -613,104 +606,38 @@ object ScaleBench {
           s""""build_sec":${math.round(tb * 1000) / 1000.0},"rows":${pairs.count()}}"""
       )
       releaseRetainedState()
-      // The EXECUTABLE pick rule, run once per round at the family's
-      // smallest tier (the bounded calibration probe the scaladoc
-      // promises): both policies measured on the same sample, labeling
-      // equality verified inside, the winner-first threshold returned.
-      // Compare its verdict against the 16×/32× rows below — if the
-      // small-tier winner also wins large, the probe is a sufficient
-      // re-tune; if not, that divergence is the round's finding.
-      if (f == ccFactors.min) {
-        val cal = operators.Dedup.ccCalibrate(pairs)
-        println(
-          s"""{"op":"cc_calibrate","factor":$f,"edges":${cal.sampleEdges},""" +
-            s""""lp_sec":${math.round(cal.lpSeconds * 1000) / 1000.0},"lp_rounds":${cal.lpRounds},""" +
-            s""""lp_escaped":${cal.lpEscaped},"star_sec":${math.round(cal.starSeconds * 1000) / 1000.0},""" +
-            s""""star_rounds":${cal.starRounds},"winner":"${cal.winner}","star_threshold":${cal.starThreshold},""" +
-            s""""margin":${math.round(cal.margin * 1000) / 1000.0},""" +
-            s""""recommended_threshold":${cal.recommendedThreshold()}}"""
-        )
-        releaseRetainedState()
-      }
-      // Each variant's timed block MATERIALIZES its labeling (parquet write
-      // — the same terminal-action cost shape as the old groupBy-count) so
-      // the tripwire below can compare full labelings without re-running
-      // either iteration.
-      val (tl, lr) = time {
+      // The timed block MATERIALIZES the labeling (parquet write) so the
+      // tripwire reads it without re-running the iteration.
+      val (tc, rounds) = time {
         val (df, r) = operators.Dedup.connectedComponentsCounted(pairs)
-        df.write.mode("overwrite").parquet(s"$tmp/cc_lp_$f"); r
+        df.write.mode("overwrite").parquet(s"$tmp/cc_$f"); r
       }
-      val lpLab = spark.read.parquet(s"$tmp/cc_lp_$f")
-      reportCc("cc_labelprop", f, tl, lpLab.select(col("comp")).distinct().count(), lr)
-      releaseRetainedState()
-      val (ts, sr) = time {
-        val (df, r) = operators.Dedup.connectedComponentsStarCounted(pairs)
-        df.write.mode("overwrite").parquet(s"$tmp/cc_star_$f"); r
-      }
-      val spLab = spark.read.parquet(s"$tmp/cc_star_$f")
-      reportCc("cc_star", f, ts, spLab.select(col("comp")).distinct().count(), sr)
-      releaseRetainedState()
-      // Tripwire on the LABELINGS, not the component count: equal counts
-      // can hide membership disagreement. Both variants contract to
-      // (id, comp = min id of component), so at fixpoint the (id, comp)
-      // sets must be identical — any symmetric difference is a bug in one
-      // of them (including a non-minimal star root, which a census or even
-      // a (comp, size)-multiset compare would miss).
-      val diff = lpLab.except(spLab).count() + spLab.except(lpLab).count()
-      require(
-        diff == 0,
-        s"CC variants disagree at factor $f: $diff (id, comp) rows differ between label-prop and star",
-      )
-      // The dispatch path users actually hit: connectedComponentsAdaptive
-      // (raw pairs in, the exact call-site shape) must choose the branch
-      // its materialized edge count dictates AND reproduce the label-prop
-      // labeling bit-for-bit. Probed at every factor with the production
-      // 20M default so the report records which branch real corpora take —
-      // at 16×/32× tiling (≥47M pairs) this exercises the star branch
-      // through the dispatcher itself, not just via an explicit pin.
-      val nPairs = pairs.count()
-      val branch = if (nPairs >= 20000000L) "star" else "labelprop"
-      val (ta, aLab) = time {
-        val df = operators.Dedup.connectedComponentsAdaptive(pairs)
-        df.write.mode("overwrite").parquet(s"$tmp/cc_adaptive_$f")
-        spark.read.parquet(s"$tmp/cc_adaptive_$f")
-      }
-      val adiff = aLab.except(lpLab).count() + lpLab.except(aLab).count()
-      require(
-        adiff == 0,
-        s"adaptive CC labeling diverged from label-prop at factor $f: $adiff rows differ (branch=$branch)",
-      )
-      // "escaped" = the label-prop branch blew its rounds budget and the
-      // dispatch fell through to star (the structure-not-size bound the
-      // cc family exists to watch) — expected false at every factor here;
-      // a true is the report that a tiling's diameter outgrew the budget.
+      val labels = spark.read.parquet(s"$tmp/cc_$f")
       println(
-        s"""{"op":"cc_adaptive","factor":$f,"sec":${math.round(ta * 1000) / 1000.0},"edges":$nPairs,""" +
-          s""""branch":"$branch","escaped":${operators.Dedup.lastAdaptiveEscaped}}"""
+        s"""{"op":"cc","factor":$f,"sec":${math.round(tc * 1000) / 1000.0},""" +
+          s""""rows":${labels.select(col("comp")).distinct().count()},"rounds":$rounds}"""
       )
-      releaseRetainedState()
-      // The OTHER dispatch policy, measured every round so the
-      // machine-era-unstable crossover is re-tunable from DATA instead
-      // of scaladoc archaeology: label-prop-first (starThreshold raised
-      // past the edge count) under the same rounds budget. The budget
-      // bounds label-prop's long-diameter downside (escape -> star), so
-      // running it first is SAFE everywhere; this row says whether it
-      // is FAST here — compare against cc_adaptive's default-dispatch
-      // seconds at 16×/32×, where the default pays for star if
-      // label-prop solo is winning in this era.
-      val (tLpf, lpfLab) = time {
-        val df = operators.Dedup.connectedComponentsAdaptive(pairs, starThreshold = Long.MaxValue)
-        df.write.mode("overwrite").parquet(s"$tmp/cc_lpfirst_$f")
-        spark.read.parquet(s"$tmp/cc_lpfirst_$f")
-      }
-      val lpfDiff = lpfLab.except(lpLab).count() + lpLab.except(lpfLab).count()
+      // Tripwire, one aggregate job: both endpoints of every edge carry
+      // the same comp, and every comp value labels itself and is at most
+      // every id carrying it (the comp = min id contract).
+      val ids = labels.select(col("id"), col("comp"))
+      val badEdges = pairs
+        .join(ids.toDF("src", "ca"), Seq("src"), "left")
+        .join(ids.toDF("dst", "cb"), Seq("dst"), "left")
+        .select(
+          (col("ca").isNull || col("cb").isNull || col("ca") =!= col("cb")).cast("long").as("e"),
+          lit(0L).as("l"),
+        )
+      val badLabels = ids
+        .join(ids.toDF("comp", "root_comp"), Seq("comp"), "left")
+        .select(
+          lit(0L).as("e"),
+          (col("root_comp").isNull || col("root_comp") =!= col("comp") || col("comp") > col("id")).cast("long").as("l"),
+        )
+      val bad = badEdges.unionAll(badLabels).agg(sum(col("e")), sum(col("l"))).head()
       require(
-        lpfDiff == 0,
-        s"label-prop-first CC labeling diverged from label-prop at factor $f: $lpfDiff rows differ",
-      )
-      println(
-        s"""{"op":"cc_adaptive_lpfirst","factor":$f,"sec":${math.round(tLpf * 1000) / 1000.0},""" +
-          s""""edges":$nPairs,"escaped":${operators.Dedup.lastAdaptiveEscaped}}"""
+        bad.getLong(0) == 0 && bad.getLong(1) == 0,
+        s"CC labeling broken at factor $f: ${bad.getLong(0)} edges span two comps, ${bad.getLong(1)} labels break comp = min id",
       )
       releaseRetainedState()
     }

@@ -65,7 +65,7 @@ object Curate {
     val pairs = candidatePairs(quality, cfg)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
     val nonSurvivors = Dedup
-      .connectedComponentsAdaptive(pairs)
+      .connectedComponents(pairs)
       .filter(col("id") =!= col("comp"))
       .select(col("id").as("doc_id"))
     quality.join(nonSurvivors, Seq("doc_id"), "left_anti")
@@ -94,7 +94,7 @@ object Curate {
       valPct: Int = 10,
   ): DataFrame = {
     require(trainPct + valPct < 100, s"train+val must leave room for test: $trainPct+$valPct")
-    val cc = Dedup.connectedComponentsAdaptive(pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+    val cc = Dedup.connectedComponents(pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
     // two consumers (cluster-hash agg + the split join) — materialize the
     // narrow (id, cluster, hash) projection once so the docs↔components
     // join and the full-text hash run exactly once

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{Hashing, SortedIntersectCount, TextAnalysis}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a large-scale training-data pipeline: exact,
@@ -484,7 +484,7 @@ object Dedup {
     * inside a block, so it guards itself: a cheap pre-flight count over just
     * `blockCol` (column-pruned scan, no tokenization) fails loudly when any
     * block exceeds `maxBlockRows`, the same stance as
-    * [[connectedComponents]]' `maxRounds` — a 3-block 100 TB corpus must
+    * [[connectedComponents]]' round cap — a 3-block 100 TB corpus must
     * error with a pointer to [[minhashNearDupPairs]], not silently enumerate
     * 10^15 pairs. The guard makes this operator EAGER (one small driver
     * action at call time).
@@ -728,348 +728,60 @@ object Dedup {
       )
   }
 
-  /** Lineage truncation for the iterative CC operators, always LAZY: the
-    * caller's convergence action (the fused changed-count / fingerprint
-    * aggregation) is the job that materializes the checkpoint, so each round
-    * costs ONE job, not a materialize-then-check pair. Replicated vs
-    * executor-local is [[Lineage.truncate]]'s policy (`reliable = true`
-    * forces replicated regardless of the session conf).
-    */
-  private def truncateLineage(d: DataFrame, reliable: Boolean): DataFrame =
-    Lineage.truncate(d, eager = false, forceReliable = reliable)
-
-  /** Connected components over an undirected pair graph (`src`,`dst` long
-    * ids) by iterative min-label propagation: every node adopts the minimum
-    * label among itself and its neighbors until fixpoint (O(component
-    * diameter) rounds — near-dup clusters are dense, so typically 2-3).
-    * Returns (id, component) where component = min id in the cluster — the
-    * canonical survivor. Each round is one join + partial-aggregated min;
-    * a lazy checkpoint ([[truncateLineage]]) truncates the growing lineage.
-    * The convergence check is fused into the round twice over: the previous
-    * label rides along through the update, and the "did anything change"
-    * count is the SAME job that materializes the round's checkpoint — one
-    * job per round total.
+  /** Connected components over an undirected pair graph (`src`, `dst`
+    * integral ids; rows with a null endpoint are ignored). Returns
+    * (id, comp) for every node, where comp = the minimum id in its
+    * component: the canonical survivor. Two steps:
     *
-    * `maxRounds` bounds the driver loop: min-label propagation is
-    * O(diameter), so hitting the cap means the graph is a long chain —
-    * fail loudly and point at the fix rather than looping for hours.
-    */
-  /** Size-adaptive connected components — the default at every near-dup /
-    * entity pair-graph site. Both variants share the `comp = min id`
-    * contract, so the choice is a PLAN decision, not a semantic one (the
-    * same size-based dispatch Spark applies to join strategies):
+    *  1. Partition-local pre-contraction: one `mapPartitions` pass runs
+    *     union-find ([[LocalStars]]) over each partition's edges and emits
+    *     (node, local min root) for every non-root node. Pair builds that
+    *     emit their edges partitioned by a blocking key (q45's block join,
+    *     q64's window) collapse most of each component here, inside the
+    *     first job.
+    *  2. Alternating large-star / small-star contraction (Kiveris et al.,
+    *     "Connected Components in MapReduce and Beyond", SoCC 2014) on the
+    *     contracted edges: O(log n) rounds whatever the diameter.
     *
-    *  - below `starThreshold` edges, min-label propagation wins — star's
-    *    two joins + distinct per round cost more than the extra label
-    *    rounds on small graphs (ScaleBench: 14 s vs 17 s at 2.9M pairs,
-    *    25 s vs 34 s at 11.7M);
-    *  - above it, star contraction is the DEFAULT — immune to the
-    *    O(diameter) failure mode outright.
-    *
-    * The large-graph crossover is MACHINE-ERA UNSTABLE, which is why the
-    * threshold is a parameter and not a constant to keep re-tuning: the
-    * r15-era takes had star flat (175 s at both 47M and 129M pairs)
-    * while label propagation doubled (196 s → 408 s); the r17 takes on
-    * the same fixture had label propagation WIN at both sizes
-    * (100 s/116 s vs star's 128 s/219 s — 6 rounds at every factor).
-    * When rounds stay in the near-dup regime the two are within ~2×
-    * either way; the budget escape below bounds label propagation's
-    * downside wherever the dispatch lands, so a caller with a measured
-    * workload can raise `starThreshold` and run label-prop-first safely
-    * (worst case = `labelRoundsBudget` abandoned rounds, then star).
-    * The edge set is materialized once (lazy checkpoint forced by the
-    * count) and the chosen variant re-reads that checkpoint, so the
-    * dispatch adds one count on data the iteration needed materialized
-    * anyway.
-    *
-    * SIZE is not the only thing that can make min-label the wrong pick:
-    * its round count is the component DIAMETER, invisible to an edge
-    * count (ScaleBench's 16× tiling converges in more rounds than its
-    * 32× — structure, not size, dominated the wall clock). So the
-    * label-prop branch runs under `labelRoundsBudget`: a graph that has
-    * not converged within the budget is a long-diameter graph on the
-    * wrong algorithm, and the dispatch ESCAPES to star contraction —
-    * immune to diameter, correct from the same materialized edges (both
-    * variants contract to comp = min id, so the escape is
-    * plan-level, hash-invisible) — with a loud stderr report of the
-    * abandoned rounds. The budget defaults well above the measured
-    * near-dup regime (2–4 rounds) so real corpora never pay the
-    * abandoned work; the escape exists for the chain-shaped tail.
+    * Each round truncates its lineage with a LAZY checkpoint; the fixpoint
+    * fingerprint aggregation is the action that materializes it, and it
+    * runs every SECOND round, so two rounds plus the convergence check ride
+    * one job. `reliable = true` forces replicated checkpoints regardless of
+    * the session conf ([[Lineage.truncate]]).
     */
-  // Test-only observability: did the last adaptive dispatch escape its
-  // label-prop rounds budget? (the OpsSpec escape case pins the path)
-  private[graft] var lastAdaptiveEscaped: Boolean = false
+  def connectedComponents(edges: DataFrame, reliable: Boolean = false): DataFrame =
+    connectedComponentsCounted(edges, reliable)._1
 
-  def connectedComponentsAdaptive(
-      edges: DataFrame,
-      starThreshold: Long = 20000000L,
-      reliable: Boolean = false,
-      labelRoundsBudget: Int = 12,
-  ): DataFrame = {
-    require(labelRoundsBudget >= 1, s"connectedComponentsAdaptive: labelRoundsBudget must be >= 1: $labelRoundsBudget")
-    val mat = truncateLineage(edges.select(col("src"), col("dst")), reliable)
-    lastAdaptiveEscaped = false
-    if (mat.count() >= starThreshold) connectedComponentsStar(mat, reliable = reliable)
-    else
-      try connectedComponents(mat, maxRounds = labelRoundsBudget, reliable = reliable)
-      catch {
-        case e: IllegalStateException if e.getMessage.contains("did not converge") =>
-          lastAdaptiveEscaped = true
-          System.err.println(
-            s"[graft] connectedComponentsAdaptive: label propagation blew its $labelRoundsBudget-round " +
-              s"budget below the $starThreshold-edge threshold (long-diameter graph - rounds, not rows) - " +
-              "escaping to star contraction on the same materialized edges.")
-          connectedComponentsStar(mat, reliable = reliable)
-      }
-  }
+  /** [[connectedComponents]] under a former name that perfbench still calls. */
+  def connectedComponentsAdaptive(edges: DataFrame): DataFrame = connectedComponents(edges)
 
-  /** A [[ccCalibrate]] run's measured verdict: per-policy wall seconds and
-    * rounds on the caller's sample, the winner, and the `starThreshold` to
-    * hand [[connectedComponentsAdaptive]] so the measured winner runs
-    * FIRST on this workload — `Long.MaxValue` for label-prop-first (its
-    * long-diameter downside stays bounded by the rounds-budget escape to
-    * star, so running it first is safe everywhere), `0` for star-first.
-    * A label-prop run that blew the budget on the sample reports
-    * `lpEscaped = true` with its abandoned seconds — star wins outright.
+  /** [[connectedComponents]] under a former name that perfbench still calls. */
+  def connectedComponentsStar(edges: DataFrame): DataFrame = connectedComponents(edges)
+
+  /** [[connectedComponents]] plus its star rounds-to-converge, which
+    * [[graft.ScaleBench]] reports.
     */
-  final case class CcCalibration(
-      sampleEdges: Long,
-      lpSeconds: Double,
-      lpRounds: Int,
-      lpEscaped: Boolean,
-      starSeconds: Double,
-      starRounds: Int,
-      winner: String,
-      starThreshold: Long,
-  ) {
-
-    /** The measured relative margin between the two arms —
-      * `|lp − star| / max(lp, star)` — or 1.0 when label propagation
-      * blew its rounds budget on the sample (star wins outright, no
-      * margin question). This is the tie detector
-      * [[recommendedThreshold]] runs on.
-      */
-    def margin: Double =
-      if (lpEscaped) 1.0
-      else math.abs(lpSeconds - starSeconds) / math.max(lpSeconds, starSeconds)
-
-    /** The threshold to actually DEPLOY, with the measured-margin
-      * tiebreak as API instead of operator prose. A calibration whose
-      * margin is inside `tieBand` is a coin flip — two policies within
-      * measurement noise of each other, exactly what the 16×-tier
-      * crossover measured (winners flipped between a full-suite take
-      * and a solo take at a 6% margin) — and the two sides of that coin
-      * are NOT symmetric: label-prop-first's downside is bounded by the
-      * rounds-budget escape to star (worst case = the abandoned budget
-      * rounds, then star), while star-first's downside on an lp-shaped
-      * workload is unbounded in principle and measured at 1.7× at the
-      * 32× tier. So inside the band this returns the budget-guarded
-      * lp-first threshold (`Long.MaxValue`); outside it, the measured
-      * winner's. A budget-blown sample stays star-first regardless —
-      * the sample itself proved the lp pathology.
-      */
-    def recommendedThreshold(tieBand: Double = 0.20): Long = {
-      require(tieBand >= 0.0 && tieBand < 1.0, s"recommendedThreshold: tieBand must be in [0, 1): $tieBand")
-      if (lpEscaped) 0L
-      else if (margin < tieBand) Long.MaxValue
-      else starThreshold
-    }
-  }
-
-  /** EXECUTABLE RE-TUNE for the CC dispatch crossover. Two consecutive
-    * measurement eras had label propagation WIN at 47M–129M edges while
-    * the era before had it LOSE 2× — the crossover is machine-era
-    * unstable, so the pick rule must be measured, not remembered. This
-    * runs BOTH policies on the caller's bounded sample, verifies their
-    * labelings agree bit-for-bit (the same tripwire the scale probe
-    * rides — both contract to comp = min id), and returns the measured
-    * winner plus the `starThreshold` that makes
-    * [[connectedComponentsAdaptive]] run it first.
-    *
-    * THE SAMPLE IS THE CALLER'S CONTRACT: pass a REPRESENTATIVE bounded
-    * edge set — the workload's smallest tier, one day's pair build, one
-    * shard — sized so both policies finish in seconds. Do NOT uniformly
-    * sample edges out of a much larger graph: thinning edges breaks
-    * components apart and lengthens paths, so the sampled diameter (and
-    * label propagation's round count) stops resembling the real
-    * workload's. Structure, not size, is what the calibration measures.
-    *
-    * The rounds budget bounds the label-prop arm the same way the
-    * adaptive dispatch bounds production runs: a sample that blows it is
-    * a long-diameter graph on the wrong algorithm — star wins without
-    * waiting out the pathology.
-    */
-  def ccCalibrate(
-      sampleEdges: DataFrame,
-      labelRoundsBudget: Int = 12,
-      reliable: Boolean = false,
-  ): CcCalibration = {
-    require(labelRoundsBudget >= 1, s"ccCalibrate: labelRoundsBudget must be >= 1: $labelRoundsBudget")
-    // The calibration returns plain scalars, but BOTH arms checkpoint
-    // every iteration round — blocks that would otherwise stay pinned in
-    // the caller's block manager until GC (cumulative checkpoint
-    // retention in a long-lived driver is a measured OOM cause). Snapshot
-    // the persisted-RDD ids at entry and release everything this probe
-    // created before returning. Assumes no CONCURRENT persists in the
-    // same session during the probe — fine for a calibration, which is a
-    // dedicated bounded measurement by contract.
-    val sc = sampleEdges.sparkSession.sparkContext
-    val preExisting = sc.getPersistentRDDs.keySet
-    try {
-      val mat = truncateLineage(sampleEdges.select(col("src"), col("dst")), reliable)
-      val n = mat.count()
-      require(n > 0, "ccCalibrate: the calibration sample has no edges - nothing to measure")
-      def timed[T](f: => T): (Double, T) = {
-        val t0 = System.nanoTime()
-        val r = f
-        ((System.nanoTime() - t0) / 1e9, r)
-      }
-      // Each arm's timed block MATERIALIZES its labeling (count on the
-      // final checkpoint) — the same terminal-action shape the scale probe
-      // times, so the numbers are comparable run to run.
-      val (lpSec, lpOut) = timed {
-        try {
-          val (df, r) = connectedComponentsCounted(mat, maxRounds = labelRoundsBudget, reliable = reliable)
-          df.count(): Unit
-          Some((df, r))
-        } catch {
-          case e: IllegalStateException if e.getMessage.contains("did not converge") => None
-        }
-      }
-      val (starSec, (starLab, starRounds)) = timed {
-        val (df, r) = connectedComponentsStarCounted(mat, reliable = reliable)
-        df.count(): Unit
-        (df, r)
-      }
-      lpOut.foreach { case (lpLab, _) =>
-        val diff = lpLab.except(starLab).count() + starLab.except(lpLab).count()
-        require(
-          diff == 0,
-          s"ccCalibrate: the two policies disagree on $diff (id, comp) rows over the same sample - a " +
-            "correctness bug in one of them, not a tuning question. Refusing to calibrate on it.")
-      }
-      val lpWins = lpOut.isDefined && lpSec < starSec
-      CcCalibration(
-        sampleEdges = n,
-        lpSeconds = lpSec,
-        lpRounds = lpOut.fold(labelRoundsBudget)(_._2),
-        lpEscaped = lpOut.isEmpty,
-        starSeconds = starSec,
-        starRounds = starRounds,
-        winner = if (lpWins) "labelprop" else "star",
-        starThreshold = if (lpWins) Long.MaxValue else 0L,
-      )
-    } finally {
-      // Release every block this probe created (entry-snapshot diff;
-      // Dataset.unpersist would miss localCheckpoint blocks, which
-      // persist on the RDD, not in the cache manager) — on refusal
-      // paths too. Safe because every frame the probe built is local
-      // to it and already materialized past its last use.
-      sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!preExisting(id)) rdd.unpersist(blocking = false)
-      }
-    }
-  }
-
-  def connectedComponents(edges: DataFrame, maxRounds: Int = 100, reliable: Boolean = false): DataFrame =
-    connectedComponentsCounted(edges, maxRounds, reliable)._1
-
-  /** [[connectedComponents]] plus its rounds-to-converge — the scale probe
-    * ([[graft.ScaleBench]]) reports the round count because it, not the
-    * per-round cost, is what grows with component diameter.
-    */
-  private[graft] def connectedComponentsCounted(
-      edges: DataFrame,
-      maxRounds: Int = 100,
-      reliable: Boolean = false,
-  ): (DataFrame, Int) = {
-    val und = truncateLineage(
+  private[graft] def connectedComponentsCounted(edges: DataFrame, reliable: Boolean = false): (DataFrame, Int) = {
+    val maxRounds = 50 // star contraction takes O(log n) rounds: hitting this is a bug
+    def truncateLineage(d: DataFrame): DataFrame = Lineage.truncate(d, eager = false, forceReliable = reliable)
+    val idType = edges.select(col("src").as("id")).unionAll(edges.select(col("dst").as("id"))).schema("id").dataType
+    require(Set("TINYINT", "SMALLINT", "INT", "BIGINT")(idType.sql), s"connectedComponents: ids must be integral: ${idType.sql}")
+    val pairEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    // (node, local root) stars; the first fingerprint job materializes them
+    val local = truncateLineage(
       edges
-        .select(col("src"), col("dst"))
-        .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct(),
-      reliable,
+        .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .as(pairEnc)
+        .mapPartitions(in => new LocalStars(in): Iterator[(Long, Long)])(pairEnc)
+        .toDF("src", "dst")
     )
-    var labels =
-      truncateLineage(und.select(col("src").as("id")).distinct().withColumn("comp", col("id")), reliable)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0) {
-      rounds += 1
-      if (rounds > maxRounds)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxRounds rounds: component diameter exceeds the " +
-            "cap (long-chain graph). Raise maxRounds, or switch to a star-contraction variant for such graphs."
-        )
-      val neighborMin = und
-        .join(labels.withColumnRenamed("id", "nid"), col("dst") === col("nid"))
-        .groupBy(col("src"))
-        .agg(min(col("comp")).as("ncomp"))
-      val next = truncateLineage(
-        labels
-          .join(neighborMin, labels("id") === neighborMin("src"), "left_outer")
-          .select(col("id"), col("comp").as("prev"), least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp")),
-        reliable,
-      )
-      changed = next.filter(col("comp") =!= col("prev")).count()
-      labels = next.select(col("id"), col("comp"))
-    }
-    (labels, rounds)
-  }
-
-  /** Connected components by ALTERNATING STAR CONTRACTION (the large-star /
-    * small-star algorithm from the MapReduce CC literature) — the
-    * O(log n)-round path for graphs whose diameter defeats
-    * [[connectedComponents]]' O(diameter) min-label propagation (a
-    * 10^6-node chain needs 10^6 label rounds but ~20 star rounds).
-    *
-    *  - large-star: every node's strictly-larger neighbors re-attach to the
-    *    minimum of its closed neighborhood;
-    *  - small-star: every node's smaller-or-equal neighbors (and itself)
-    *    re-attach to that minimum.
-    *
-    * Both steps are a groupBy-min + broadcast-free equi-join per round, all
-    * min-based and deterministic (no RNG). At fixpoint the edge set is a
-    * union of stars whose centers are the component minima — the same
-    * (id, comp = min id) contract as [[connectedComponents]], so the two are
-    * interchangeable. Lineage is truncated per round with a LAZY checkpoint
-    * ([[truncateLineage]]); the fixpoint fingerprint aggregation is the
-    * action that materializes it, and it runs every SECOND round, so two
-    * rounds of contraction plus the convergence check ride one job.
-    */
-  def connectedComponentsStar(edges: DataFrame, maxRounds: Int = 50, reliable: Boolean = false): DataFrame =
-    connectedComponentsStarCounted(edges, maxRounds, reliable)._1
-
-  /** [[connectedComponentsStar]] plus its rounds-to-converge (see
-    * [[connectedComponentsCounted]]).
-    */
-  private[graft] def connectedComponentsStarCounted(
-      edges: DataFrame,
-      maxRounds: Int = 50,
-      reliable: Boolean = false,
-  ): (DataFrame, Int) = {
-    val nodes = truncateLineage(
-      edges
-        .select(col("src").as("id"))
-        .unionAll(edges.select(col("dst").as("id")))
-        .distinct(),
-      reliable,
-    )
-    // canonical working set: undirected closure, self-loops dropped
-    var e = truncateLineage(
-      edges
-        .select(col("src"), col("dst"))
-        .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .filter(col("src") =!= col("dst"))
-        .distinct(),
-      reliable,
-    )
-    def minOfNeighborhood(d: DataFrame) =
-      d.groupBy(col("src")).agg(least(min(col("dst")), first(col("src"))).as("m"))
+    val nodes = local.select(col("src").as("id")).unionAll(local.select(col("dst").as("id"))).distinct()
+    // working set: edges directed big -> small, self-loops dropped
+    var e = truncateLineage(local.filter(col("src") =!= col("dst")).distinct())
+    def minOfNeighborhood(d: DataFrame) = d.groupBy(col("src")).agg(least(min(col("dst")), col("src")).as("m"))
     // distinct edge sets are equal iff (count, xor of row hashes) agree —
-    // one partial-agg job over the lazily-checkpointed set (the agg both
-    // materializes the checkpoint and computes the fingerprint), vs the two
-    // exceptAll shuffles of a literal set-difference check
+    // one partial-agg job that also materializes the lazy checkpoint
     def fingerprint(d: DataFrame): (Long, Long) = {
       val r = d.agg(count(lit(1)), coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
@@ -1081,50 +793,118 @@ object Dedup {
       rounds += 1
       if (rounds > maxRounds)
         throw new IllegalStateException(
-          s"connectedComponentsStar did not converge in $maxRounds rounds — star contraction is " +
+          s"connectedComponents did not converge in $maxRounds star rounds — star contraction is " +
             "O(log n), so this indicates a bug or a pathological input, not a long chain."
         )
-      // Convergence is only CHECKED every second round: the checkpoints stay
-      // lazy, so a skipped check means the two rounds materialize under ONE
-      // action — half the job launches, at the price of up to two extra
-      // (cheap, already-fixpoint) rounds. Correct because the star fixpoint
-      // is absorbing: once e stops changing it never changes again, so two
-      // equal CHECKED fingerprints still witness the fixpoint.
-      // large-star: (v, m(u)) for v in N(u), v > u — keeps the graph
-      // connected while hanging big nodes off local minima. No dedup here:
-      // the small-star canonicalization's distinct absorbs duplicates.
+      // large-star: (v, m(u)) for v in N(u), v > u; m(u) <= u < v, so the
+      // output is already directed big -> small. No dedup: duplicates
+      // cannot change a min, and the round-final distinct absorbs them.
       val und = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
       val ls = und
         .join(minOfNeighborhood(und), "src")
         .filter(col("dst") > col("src"))
         .select(col("dst").as("src"), col("m").as("dst"))
-        .filter(col("src") =!= col("dst"))
-      // small-star on the large-star output, edges directed big -> small:
-      // (v, m(u)) for v in N<=(u) and u itself. NOT deduped: duplicates
-      // cannot change a min, and the round-final distinct absorbs the dup
-      // (dst, m) rows they produce — a distinct here is a wasted shuffle.
-      val dir = ls
-        .select(greatest(col("src"), col("dst")).as("src"), least(col("src"), col("dst")).as("dst"))
-      val mins = minOfNeighborhood(dir)
-      val ss = dir
-        .join(mins, "src")
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .unionAll(mins.select(col("src"), col("m").as("dst")))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-      val ssc = truncateLineage(ss, reliable)
-      if (rounds % 2 == 0 || rounds == maxRounds) {
-        val cur = fingerprint(ssc)
+      // small-star: (v, m(u)) for v in N<=(u) and u itself
+      val mins = minOfNeighborhood(ls)
+      e = truncateLineage(
+        ls.join(mins, "src")
+          .select(col("dst").as("src"), col("m").as("dst"))
+          .unionAll(mins.select(col("src"), col("m").as("dst")))
+          .filter(col("src") =!= col("dst"))
+          .distinct()
+      )
+      // Checked every SECOND round, so two rounds materialize under one
+      // action. Correct because the star fixpoint is absorbing: once e
+      // stops changing it never changes again.
+      if (rounds % 2 == 0) {
+        val cur = fingerprint(e)
         converged = cur == prev
         prev = cur
       }
-      e = ssc
     }
     // fixpoint edges are child -> component-min stars; roots label themselves
     val labeled = nodes
       .join(e.select(col("src").as("id"), col("dst").as("root")), Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("root"), col("id")).as("comp"))
+      .select(col("id").cast(idType).as("id"), coalesce(col("root"), col("id")).cast(idType).as("comp"))
     (labeled, rounds)
+  }
+
+  /** Union-find over one partition's edges (union by min id, path halving,
+    * ids interned into primitive arrays behind an open-addressing table).
+    * Emits (node, root) for every non-root node, and (node, node) for a node
+    * seen only in self-loops so it keeps its label. After 2^20 distinct
+    * nodes the forest is emitted and the pass restarts: each window's stars
+    * carry exactly that window's connectivity, so the bound on memory costs
+    * contraction, never correctness.
+    */
+  private final class LocalStars(in: Iterator[(Long, Long)]) extends Iterator[(Long, Long)] {
+    private val window = 1 << 20
+    private var ids = new Array[Long](1024) // dense index -> node id
+    private var parent = new Array[Int](1024)
+    private var linked = new Array[Boolean](1024) // endpoint of a non-self-loop edge
+    private var table = new Array[Int](2048) // dense index + 1; 0 = empty
+    private var n, emitAt = 0
+    private var pending: (Long, Long) = _
+
+    private def slot(id: Long): Int = {
+      var s = java.lang.Long.hashCode(id * 0x9e3779b97f4a7c15L) & (table.length - 1)
+      while (table(s) != 0 && ids(table(s) - 1) != id) s = (s + 1) & (table.length - 1)
+      s
+    }
+
+    private def intern(id: Long): Int = {
+      val s = slot(id)
+      if (table(s) != 0) table(s) - 1
+      else if (n == ids.length) {
+        ids = java.util.Arrays.copyOf(ids, n * 2)
+        parent = java.util.Arrays.copyOf(parent, n * 2)
+        linked = java.util.Arrays.copyOf(linked, n * 2)
+        table = new Array[Int](n * 4)
+        for (i <- 0 until n) table(slot(ids(i))) = i + 1
+        intern(id)
+      } else {
+        ids(n) = id; parent(n) = n; linked(n) = false; table(s) = n + 1
+        n += 1
+        n - 1
+      }
+    }
+
+    private def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+
+    def hasNext: Boolean = {
+      while (pending == null && (emitAt < n || in.hasNext)) {
+        if (emitAt == n) { // next window: ingest until the input ends or the window fills
+          java.util.Arrays.fill(table, 0)
+          n = 0; emitAt = 0
+          while (in.hasNext && n <= window - 2) {
+            val (a, b) = in.next()
+            val (ia, ib) = (intern(a), intern(b))
+            if (ia != ib) {
+              linked(ia) = true; linked(ib) = true
+              val (ra, rb) = (find(ia), find(ib))
+              if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb
+            }
+          }
+        } else {
+          val i = emitAt
+          emitAt += 1
+          if (!linked(i)) pending = (ids(i), ids(i))
+          else if (find(i) != i) pending = (ids(i), ids(find(i)))
+        }
+      }
+      pending != null
+    }
+
+    def next(): (Long, Long) = {
+      if (!hasNext) throw new NoSuchElementException("LocalStars is exhausted")
+      val p = pending
+      pending = null
+      p
+    }
   }
 
   /** SimHash near-dup pairs: bucket by the TOP `prefixBits` bits (so
@@ -3395,7 +3175,7 @@ object Dedup {
         .select(col("id_a"), col("id_b"), floor(col("jaccard") * 1000 + lit(0.5)).cast("long").as("__jq"))
     )
     val comps = Lineage.truncate(
-      connectedComponentsAdaptive(pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+      connectedComponents(pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
     )
     val sizes = comps.groupBy(col("comp")).agg(count(lit(1)).as("n_members"))
     pairs
@@ -3441,7 +3221,7 @@ object Dedup {
       minhashNearDupPairs(docs, idCol, textCol, k, bands, threshold)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
     )
-    val comps = connectedComponentsAdaptive(pairs)
+    val comps = connectedComponents(pairs)
     val members = docs
       .join(comps.withColumnRenamed("id", idCol), Seq(idCol))
       .select(col(idCol), col("comp"), size(TextAnalysis.wsTokens(col(textCol))).as("__toks"))

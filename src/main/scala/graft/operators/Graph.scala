@@ -363,7 +363,7 @@ object Graph {
     * the degree table the round needs anyway. Rounds are data-dependent
     * (a chain peels one layer per round), so an unconverged `maxRounds`
     * exit throws LOUDLY — a silent partial peel would over-report the
-    * core — the [[graft.operators.Dedup.connectedComponents]] stance.
+    * core — the round-cap stance of [[graft.operators.Dedup.connectedComponents]].
     */
   def kCore(
       edges: DataFrame,

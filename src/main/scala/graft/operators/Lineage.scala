@@ -22,11 +22,15 @@ object Lineage {
     * a PASS-THROUGH so `explain` shows the whole operator tree. A
     * checkpoint boundary hides everything below it from every plan dump
     * (the pair-build subtree of the banding family reads as one
-    * `Scan ExistingRDD` line), which made several rounds' committed plan
-    * evidence vacuous. Never set this in a real run: truncation is
-    * load-bearing (plan-growth bounds, materialize-once contracts).
+    * `Scan ExistingRDD` line). Truncation is load-bearing in a real run
+    * (plan-growth bounds, materialize-once contracts, the CC rounds), so
+    * the conf takes effect only in a JVM started with the [[DumpFullEnv]]
+    * environment variable: a session conf alone cannot switch it off.
     */
   val DumpFullPlansKey = "spark.graft.dumpFullPlans"
+
+  /** The environment variable that arms [[DumpFullPlansKey]]. */
+  val DumpFullEnv = "SPARK_GRAFT_DUMP_FULL"
 
   /** Truncate `df`'s lineage. `eager = false` defers materialization to the
     * caller's next action (used by the iterative CC operators so the
@@ -35,7 +39,8 @@ object Lineage {
     * parameter override the session conf.
     */
   def truncate(df: DataFrame, eager: Boolean = true, forceReliable: Boolean = false): DataFrame = {
-    if (df.sparkSession.conf.getOption(DumpFullPlansKey).exists(_.trim.equalsIgnoreCase("true")))
+    if (sys.env.contains(DumpFullEnv) &&
+        df.sparkSession.conf.getOption(DumpFullPlansKey).exists(_.trim.equalsIgnoreCase("true")))
       return df
     val reliable = forceReliable || df.sparkSession.conf.getOption(ConfKey).exists { v =>
       // accept the common truthy/falsy spellings; anything else names the

@@ -78,21 +78,21 @@ object Multimodal {
     * formats reuse the thread-local reader (same reader class the
     * registry walk would pick — the JDK ships exactly one reader per
     * sniffed format); anything else falls back to the full `ImageIO.read`
-    * dispatch, so the total-function contract is unchanged.
+    * dispatch, so the total-function contract is unchanged. Only the
+    * sniffed path closes its stream: `ImageIO.read` closes the stream
+    * itself, and a second close throws outside the `NonFatal` catch.
     */
-  private[graft] def decodeImage(bytes: Array[Byte]): java.awt.image.BufferedImage = {
-    val iis = memIn(bytes)
+  private[graft] def decodeImage(bytes: Array[Byte]): java.awt.image.BufferedImage =
     try {
       val fmt = sniffFormat(bytes)
-      if (fmt == null) javax.imageio.ImageIO.read(iis)
+      if (fmt == null) javax.imageio.ImageIO.read(memIn(bytes))
       else {
+        val iis = memIn(bytes)
         val r = readerFor(fmt)
         try { r.setInput(iis, true, true); r.read(0) }
-        finally r.reset()
+        finally { r.reset(); iis.close() }
       }
     } catch { case scala.util.control.NonFatal(_) => null }
-    finally iis.close()
-  }
 
   /** One media row: opaque payload + typed metadata. */
   final case class MediaRecord(
@@ -891,7 +891,7 @@ object Multimodal {
       phashFramePairs(fh, minShared, maxDist, frameStep)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
     )
-    val comps = Dedup.connectedComponentsAdaptive(pairs)
+    val comps = Dedup.connectedComponents(pairs)
     val frames = fh.groupBy(col("media_id")).agg(count(lit(1)).as("__nf"))
     val members = frames
       .join(comps.withColumnRenamed("id", "media_id"), Seq("media_id"))
@@ -998,7 +998,7 @@ object Multimodal {
       sigOverlapPairs(fh, minShared, maxVideosPerSig)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
     )
-    val comps = Dedup.connectedComponentsAdaptive(pairs)
+    val comps = Dedup.connectedComponents(pairs)
     val frames = fh.groupBy(col("media_id")).agg(count(lit(1)).as("__nf"))
     val members = frames
       .join(comps.withColumnRenamed("id", "media_id"), Seq("media_id"))
@@ -1473,9 +1473,8 @@ object Multimodal {
 
   /** End-to-end perceptual image dedup with canonicalization: aHash over
     * REAL decoded pixels → [[Dedup.hammingPairs]] (banded candidates, loud
-    * bucket guard) → [[Dedup.connectedComponentsAdaptive]] (label-prop or
-    * star by measured edge count) → keep the LARGEST image per cluster
-    * (pixel count, media-id tie-break) — the image sibling of
+    * bucket guard) → [[Dedup.connectedComponents]] → keep the LARGEST
+    * image per cluster (pixel count, media-id tie-break) — the image sibling of
     * [[Dedup.neardupKeepBest]]. One pair materialization, token-free;
     * only clustered images pay the join; singletons (nothing paired)
     * are absent, as in the text variant.
@@ -1504,7 +1503,7 @@ object Multimodal {
         .hammingPairs(sigs, "media_id", "sig", bits = 64, prefixBits = prefixBits, maxDist = maxDist)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
     )
-    val comps = Dedup.connectedComponentsAdaptive(pairs)
+    val comps = Dedup.connectedComponents(pairs)
     val members = hashed
       .join(comps.withColumnRenamed("id", "media_id"), Seq("media_id"))
       .select(col("media_id"), col("comp"), (col("width").cast("long") * col("height")).as("__px"))
@@ -1770,7 +1769,7 @@ object Multimodal {
         .hammingPairs(nodes, "node", "sig", bits = 64, prefixBits = prefixBits, maxDist = maxDist)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
     )
-    val comps = Dedup.connectedComponentsAdaptive(pairs)
+    val comps = Dedup.connectedComponents(pairs)
     val membership = fp
       .join(groups, Seq("fp_hi", "fp_lo"))
       .join(comps.withColumnRenamed("id", "node"), Seq("node"), "left")

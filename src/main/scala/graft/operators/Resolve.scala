@@ -170,7 +170,7 @@ object Resolve {
   ): DataFrame = {
     require(fuseFirst.nonEmpty || fuseMax.nonEmpty, "goldenRecords: need at least one fused attribute")
     val comps = Dedup
-      .connectedComponentsAdaptive(matchedPairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+      .connectedComponents(matchedPairs.select(col("id_a").as("src"), col("id_b").as("dst")))
       .select(col("id").as(idCol), col("comp"))
     val members = entities
       .join(comps, Seq(idCol), "left")

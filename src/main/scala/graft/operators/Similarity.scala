@@ -489,7 +489,7 @@ object Similarity {
     *    chains: in A~B, B~C (A≁C), B drops for A and C drops for B — even
     *    though C's only qualifying partner was already dropped.
     *  - `representative = true`: connected components over the qualifying
-    *    pair graph ([[Dedup.connectedComponentsStar]] — the pair graph
+    *    pair graph ([[Dedup.connectedComponents]] — the pair graph
     *    holds only docs in >= 1 pair, tiny vs the corpus), keep exactly
     *    the CENTROID-NEAREST doc per component (max `sim` to its assigned
     *    centroid, ties to the lowest id; the sim rides out of the argmax
@@ -519,7 +519,7 @@ object Similarity {
         // Components of the pair graph, then one window over (component
         // members ⋈ sim) — both sides fixed-width (id, comp, sim), no
         // vectors; the non-representative members are the drop set.
-        val comps = Dedup.connectedComponentsStar(
+        val comps = Dedup.connectedComponents(
           pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         )
         comps

@@ -1889,17 +1889,6 @@ class ExtensionSpec extends SparkSpec {
     assert(l0._3 == l0._4 && l1._3 == l1._4)
   }
 
-  test("connectedComponentsAdaptive: both dispatch arms label identically across the threshold") {
-    // two components: a triangle {1,2,3} and an edge {10,11}
-    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L)).toDF("src", "dst")
-    val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L)
-    def labels(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // threshold above the edge count -> label propagation; below -> star
-    assert(labels(Dedup.connectedComponentsAdaptive(edges, starThreshold = 100L)) == expect)
-    assert(labels(Dedup.connectedComponentsAdaptive(edges, starThreshold = 1L)) == expect)
-  }
-
   test("neardupKeepBest: longest member survives, doc-id breaks ties, dropped census") {
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),

@@ -85,4 +85,26 @@ class JhuPipelineSpec extends SparkSpec {
       "type=confirmed/Atlantis.json",
     ))
   }
+
+  test("parser2 over landed CSVs: an empty province joins, keys and serializes as an empty string") {
+    // Spark's CSV reader reads an empty field as null; csv.DictReader reads "".
+    val dir = java.nio.file.Files.createTempDirectory("graft-jhu-empty").toString
+    def land(name: String, rows: String*): String = {
+      val f = java.nio.file.Paths.get(dir, s"$name.csv")
+      java.nio.file.Files.writeString(f, ("Province/State,Country/Region,Lat,Long,1/22/20,1/23/20" +: rows).mkString("", "\n", "\n"))
+      f.toString
+    }
+    def read(path: String) = graft.sources.Csv.readCsv(spark, path)
+    val out = Pipelines.parser2(
+      read(land("confirmed", ",Freedonia,10.5,-20.25,1,2")),
+      read(land("deaths", ",Freedonia,10.5,-20.25,0,1")),
+      read(land("recovered", ",Freedonia,10.5,-20.25,3,4")),
+      Enrich.withFileOrder(Seq(("Freedonia", "FD", "10.5", "-20.25")).toDF("Country_Region", "iso2", "Lat", "Long_")),
+    )
+    assert(jsonOf(out)("Freedonia") ==
+      """{"time_series":[{"date":"2020-01-22 00:00:00","confirmed":1,"deaths":0,"recovered":3},""" +
+        """{"date":"2020-01-23 00:00:00","confirmed":2,"deaths":1,"recovered":4}],""" +
+        """"province/state":"","country/region":"Freedonia","lat":10.5,"long":-20.25,"iso2":"FD"}""")
+    assert(out.select(Pipelines.recordKey("confirmed")).as[String].collect().toSeq == Seq("type=confirmed/Freedonia.json"))
+  }
 }

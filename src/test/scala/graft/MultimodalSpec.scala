@@ -708,4 +708,22 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.decodeImage("not an image".getBytes("utf-8")) == null)
     assert(Multimodal.decodeImage(Array.emptyByteArray) == null)
   }
+
+  test("decodeImage: unsniffed formats decode; a corrupt unsniffed payload answers null") {
+    import java.awt.image.BufferedImage
+    def encode(img: BufferedImage, fmt: String): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      assert(javax.imageio.ImageIO.write(img, fmt, out), s"no JDK writer for $fmt")
+      out.toByteArray
+    }
+    val rgb = new BufferedImage(12, 7, BufferedImage.TYPE_INT_RGB)
+    rgb.setRGB(3, 2, 0xff0000)
+    val bmp = encode(rgb, "bmp")
+    val wbmp = encode(new BufferedImage(9, 5, BufferedImage.TYPE_BYTE_BINARY), "wbmp")
+    for ((fmt, bytes, w, h) <- Seq(("bmp", bmp, 12, 7), ("wbmp", wbmp, 9, 5))) {
+      val img = Multimodal.decodeImage(bytes)
+      assert(img != null && img.getWidth == w && img.getHeight == h, s"$fmt did not decode")
+    }
+    assert(Multimodal.decodeImage(bmp.take(40)) == null, "a truncated BMP must answer null, not throw")
+  }
 }

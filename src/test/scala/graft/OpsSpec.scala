@@ -400,75 +400,4 @@ class OpsSpec extends SparkSpec {
     val ex = intercept[IllegalArgumentException](Dedup.dedupChainDiff(spark, dir, 0L, 9L))
     assert(ex.getMessage.contains("generation 9 not in"), ex.getMessage)
   }
-
-  test("connectedComponentsAdaptive: a long-diameter graph escapes the rounds budget to star") {
-    import graft.operators.Dedup
-    // a 64-node path: diameter 63 — min-label propagation moves the min
-    // one hop per round, so a 4-round budget must trip the escape
-    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
-    val out = Dedup.connectedComponentsAdaptive(chain, labelRoundsBudget = 4)
-    val got = out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(Dedup.lastAdaptiveEscaped, "the 4-round budget must trip on a diameter-63 path")
-    assert(got == (0L to 63L).map(i => (i, 0L)).toSet,
-      "the star escape must still label the whole chain comp = min id")
-    // the dense near-dup regime (diameter 2) never escapes under the default
-    val dense = (1L to 20L).map(i => (0L, i)).toDF("src", "dst")
-    val out2 = Dedup.connectedComponentsAdaptive(dense)
-    val got2 = out2.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(!Dedup.lastAdaptiveEscaped, "a star graph converges inside the default budget")
-    assert(got2 == (0L to 20L).map(i => (i, 0L)).toSet)
-  }
-
-  test("ccCalibrate: measures both policies, verifies labeling equality, returns the winner-first threshold") {
-    import graft.operators.Dedup
-    // two dense components + a short tail — converges fast on both arms
-    val edges = ((1L to 15L).map(i => (0L, i)) ++ (101L to 110L).map(i => (100L, i)) ++
-      Seq((15L, 16L), (16L, 17L))).toDF("src", "dst")
-    val cal = Dedup.ccCalibrate(edges)
-    assert(cal.sampleEdges == 27L)
-    assert(cal.lpSeconds > 0 && cal.starSeconds > 0)
-    assert(!cal.lpEscaped, "a diameter-3 sample must converge inside the default budget")
-    assert(Set("labelprop", "star")(cal.winner))
-    // the threshold ENCODES the winner: MaxValue = label-prop-first (the
-    // budget escape bounds its tail), 0 = star-first
-    assert(cal.starThreshold == (if (cal.winner == "labelprop") Long.MaxValue else 0L))
-    assert((cal.winner == "labelprop") == (cal.lpSeconds < cal.starSeconds))
-    // the calibration is EXECUTABLE: dispatching with the returned
-    // threshold reproduces the same labeling either way
-    val expect = (0L to 17L).map(i => (i, 0L)).toSet ++ (100L to 110L).map(i => (i, 100L)).toSet
-    val labeled = Dedup.connectedComponentsAdaptive(edges, starThreshold = cal.starThreshold)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(labeled == expect)
-    // a long-diameter sample: the lp arm blows its budget and star wins
-    // outright — the report says so instead of waiting out the pathology
-    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
-    val cal2 = Dedup.ccCalibrate(chain, labelRoundsBudget = 4)
-    assert(cal2.lpEscaped && cal2.winner == "star" && cal2.starThreshold == 0L,
-      s"a budget-blowing sample must calibrate star-first: $cal2")
-    // the measured margin and the tiebreak are part of the report's API
-    assert(cal2.margin == 1.0 && cal2.recommendedThreshold(0.99) == 0L,
-      "a budget-blown sample stays star-first at ANY tie band - the sample proved the lp pathology")
-    assert(cal.recommendedThreshold(0.0) == cal.starThreshold,
-      "a zero tie band is the raw measured winner")
-  }
-
-  test("CcCalibration.recommendedThreshold: a margin inside the tie band deploys budget-guarded lp-first") {
-    import graft.operators.Dedup.CcCalibration
-    // the 16x-tier shape: star nominally wins by 6% - a coin flip, and
-    // the asymmetric downside rule must override the raw winner (lp's
-    // tail is rounds-budget-bounded; star's loss was measured 1.7x)
-    val coinFlip = CcCalibration(1000L, 10.6, 3, lpEscaped = false, 10.0, 5, "star", 0L)
-    assert(math.abs(coinFlip.margin - 0.6 / 10.6) < 1e-12)
-    assert(coinFlip.recommendedThreshold() == Long.MaxValue,
-      "inside the default 20% band the safe tiebreak is lp-first, whatever the raw winner")
-    assert(coinFlip.recommendedThreshold(tieBand = 0.01) == 0L,
-      "outside the band the measured winner deploys")
-    // a decisive star win is never overridden
-    val starBig = CcCalibration(1000L, 20.0, 3, lpEscaped = false, 10.0, 5, "star", 0L)
-    assert(starBig.margin == 0.5 && starBig.recommendedThreshold() == 0L)
-    // a decisive lp win deploys lp-first both ways
-    val lpBig = CcCalibration(1000L, 10.0, 3, lpEscaped = false, 20.0, 5, "labelprop", Long.MaxValue)
-    assert(lpBig.recommendedThreshold() == Long.MaxValue)
-    intercept[IllegalArgumentException](lpBig.recommendedThreshold(1.0))
-  }
 }

@@ -95,10 +95,64 @@ class PropertySpec extends SparkSpec {
     } yield edges.filter { case (a, b) => a != b }
     forAll(edgeGen, 10) { edges =>
       whenever(edges.nonEmpty) {
-        val df = edges.toDF("src", "dst")
-        val star = Dedup.connectedComponentsStar(df).as[(Long, Long)].collect().toMap
-        val label = Dedup.connectedComponents(df).as[(Long, Long)].collect().toMap
+        val star = Dedup.connectedComponents(edges.toDF("src", "dst")).as[(Long, Long)].collect().toMap
+        val label = CcOracle.minLabel(edges)
         assert(star == label, s"edges=$edges star=$star label=$label")
+      }
+    }
+  }
+
+  test("CC: connectedComponents matches a union-find oracle on generated graphs under three layouts") {
+    import graft.operators.Dedup
+    import org.apache.spark.sql.functions.rand
+    // oracle: every node of an edge -> the minimum id of its component
+    def oracle(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.toSeq.map(x => x -> find(x)).toMap
+    }
+    // one component's edges over local ids 0..n-1
+    val componentGen: Gen[Seq[(Long, Long)]] = Gen.oneOf(
+      Gen.choose(2, 200).map(n => (0 until n - 1).map(i => (i.toLong, i + 1L))), // path
+      Gen.choose(2, 40).map(n => (1 until n).map(i => (0L, i.toLong))), // star
+      Gen.choose(2, 8).map(n => for (i <- 0 until n; j <- i + 1 until n) yield (i.toLong, j.toLong)), // clique
+      Gen.const(Seq((0L, 0L))), // a node seen only in a self-loop
+    )
+    // components relabeled onto one random id permutation, with random edge
+    // directions, duplicate edges and self-loops mixed in
+    val graphGen: Gen[Seq[Seq[(Long, Long)]]] = for {
+      comps <- Gen.choose(1, 6).flatMap(k => Gen.listOfN(k, componentGen))
+      seed <- Gen.choose(0L, Long.MaxValue)
+    } yield {
+      val rnd = new scala.util.Random(seed)
+      val sizes = comps.map(c => c.flatMap { case (a, b) => Seq(a, b) }.max.toInt + 1)
+      val perm = rnd.shuffle((0 until sizes.sum).map(_ * 7L + 3L))
+      comps.zip(sizes.scanLeft(0)(_ + _)).map { case (c, base) =>
+        val ids = (e: (Long, Long)) => (perm(base + e._1.toInt), perm(base + e._2.toInt))
+        val es = c.map(ids).map { case (a, b) => if (rnd.nextBoolean()) (a, b) else (b, a) }
+        val dups = es.filter(_ => rnd.nextInt(5) == 0).map(_.swap)
+        val loops = es.filter(_ => rnd.nextInt(10) == 0).map { case (a, _) => (a, a) }
+        rnd.shuffle(es ++ dups ++ loops)
+      }
+    }
+    forAll(graphGen, 8) { comps =>
+      val all = comps.flatten
+      val want = oracle(all)
+      val layouts = Seq(
+        "one partition" -> all.toDF("src", "dst").repartition(1),
+        "random repartition" -> all.toDF("src", "dst").repartition(5, rand(all.size.toLong)),
+        "component per partition" -> spark.sparkContext.parallelize(comps, comps.size).flatMap(identity).toDF("src", "dst"),
+      )
+      for ((layout, df) <- layouts) {
+        val got = Dedup.connectedComponents(df).as[(Long, Long)].collect()
+        assert(got.length == want.size && got.toMap == want, s"$layout: ${comps.map(_.size)} components differ")
       }
     }
   }

@@ -181,13 +181,34 @@ class QualitySpec extends SparkSpec {
   }
 
   test("connected components: reliable checkpointing matches local, both operators") {
+    // reliable mode through the parameter of connectedComponents and through
+    // the session conf under connectedComponentsStar (its one-line forward)
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
     val local = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
     val rel = Dedup.connectedComponents(edges, reliable = true).as[(Long, Long)].collect().toMap
-    val relStar = Dedup.connectedComponentsStar(edges, reliable = true).as[(Long, Long)].collect().toMap
-    assert(rel == local && relStar == local, s"local=$local rel=$rel star=$relStar")
+    spark.conf.set(graft.operators.Lineage.ConfKey, "true")
+    val viaConf =
+      try Dedup.connectedComponentsStar(edges).as[(Long, Long)].collect().toMap
+      finally spark.conf.set(graft.operators.Lineage.ConfKey, "false")
+    assert(rel == local && viaConf == local, s"local=$local rel=$rel viaConf=$viaConf")
+    val written = new java.io.File(dir).listFiles()
+    assert(written != null && written.nonEmpty, s"no reliable checkpoint written under $dir")
+  }
+
+  test("spark.graft.dumpFullPlans set in a session alone still truncates lineage") {
+    import graft.operators.Lineage
+    assume(!sys.env.contains(Lineage.DumpFullEnv), s"${Lineage.DumpFullEnv} arms the knob in this JVM")
+    spark.sparkContext.setCheckpointDir(java.nio.file.Files.createTempDirectory("graft-ckpt-dump").toString)
+    val df = spark.range(10).toDF("id")
+    spark.conf.set(Lineage.DumpFullPlansKey, "true")
+    try
+      for (t <- Seq(Lineage.truncate(df), Lineage.truncate(df, eager = false, forceReliable = true))) {
+        assert(!(t eq df), "truncate passed the frame through")
+        assert(t.queryExecution.logical.getClass.getSimpleName == "LogicalRDD", t.queryExecution.logical.toString)
+      }
+    finally spark.conf.unset(Lineage.DumpFullPlansKey)
   }
 
   test("spark.graft.reliableCheckpoints=true flips every operator to replicated checkpoints") {

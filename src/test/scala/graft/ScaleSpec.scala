@@ -623,15 +623,21 @@ class ScaleSpec extends SparkSpec {
     import graft.operators.Dedup
     // a 1000-node path graph: diameter 999, so min-label needs 999 rounds
     val chain = spark.range(999).selectExpr("id AS src", "id + 1 AS dst")
-    intercept[IllegalStateException](Dedup.connectedComponents(chain, maxRounds = 20).count())
-    val labels = Dedup.connectedComponentsStar(chain).as[(Long, Long)].collect()
-    assert(labels.length == 1000)
-    assert(labels.forall(_._2 == 0L), s"single chain must collapse to component 0: ${labels.filter(_._2 != 0L).take(3)}")
-    // multiple components + equivalence with min-label on a small graph
-    val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L)).toDF("src", "dst")
-    val star = Dedup.connectedComponentsStar(edges).as[(Long, Long)].collect().toMap
-    val label = Dedup.connectedComponents(edges).as[(Long, Long)].collect().toMap
-    assert(star == label, s"star=$star label=$label")
+    intercept[IllegalStateException](CcOracle.minLabel(chain.as[(Long, Long)].collect().toSeq, maxRounds = 20))
+    // star rounds in range order and shuffled: shuffled, each partition's
+    // union-find pass sees only fragments and the star rounds do the joining
+    for (edges <- Seq(chain, chain.repartition(16))) {
+      val (df, rounds) = Dedup.connectedComponentsCounted(edges)
+      val labels = df.as[(Long, Long)].collect()
+      assert(labels.length == 1000)
+      assert(labels.forall(_._2 == 0L), s"single chain must collapse to component 0: ${labels.filter(_._2 != 0L).take(3)}")
+      assert(rounds <= 24, s"$rounds star rounds for a 1000-node chain")
+    }
+    // one partition with more nodes than the union-find window (2^20): the
+    // pass flushes mid-partition and the star rounds join the windows
+    val long = spark.range(0L, 1100000L, 1L, 1).selectExpr("id AS src", "id + 1 AS dst")
+    val agg = Dedup.connectedComponents(long).agg(count(lit(1)), max(col("comp"))).head()
+    assert(agg.getLong(0) == 1100001L && agg.getLong(1) == 0L, agg.toString)
   }
 
   test("writeBloomFiltered: footer carries a bloom filter for the keyed column only") {
@@ -722,23 +728,6 @@ class ScaleSpec extends SparkSpec {
         s"bloom should skip at least half the row groups: $bloomHits of ${blocks.size}",
       )
     } finally reader.close()
-  }
-
-  test("adaptive CC dispatches on edge count and both branches label identically") {
-    import graft.operators.Dedup
-    val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L))
-      .toDF("src", "dst")
-    // threshold above the edge count -> label-prop branch; below -> star
-    // branch; the (id, comp = min id) contract must make both labelings
-    // identical, and equal to the hand-computed min labels
-    val viaLabel = Dedup.connectedComponentsAdaptive(edges, starThreshold = 1000000L)
-      .as[(Long, Long)].collect().toMap
-    val viaStar = Dedup.connectedComponentsAdaptive(edges, starThreshold = 1L)
-      .as[(Long, Long)].collect().toMap
-    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L,
-      20L -> 20L, 21L -> 20L, 22L -> 20L)
-    assert(viaLabel == want, s"label branch: $viaLabel")
-    assert(viaStar == want, s"star branch: $viaStar")
   }
 
   test("jaccardPairs: oversized block fails loudly instead of running N² silently") {
